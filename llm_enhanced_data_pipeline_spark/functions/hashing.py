@@ -83,25 +83,10 @@ def minhash_value(tokens: Column, seed: int) -> Column:
     return F.coalesce(F.array_min(hashed), F.lit(EMPTY_MINHASH + seed)).cast("bigint")
 
 
-def minhash_signature_from_hashes(hashes: Column, num_hashes: int) -> Column:
-    """Signature array from a pre-materialized stable_hash32 array."""
-
-    def mixer(a: int, b: int):
-        return lambda h: (h * a + b) % MINHASH_PRIME
-
-    comps = []
-    for i in range(num_hashes):
-        a, b = _mix_consts(i)
-        mixed = F.transform(hashes, mixer(a, b))
-        comps.append(
-            F.coalesce(F.array_min(mixed), F.lit(EMPTY_MINHASH + i)).cast("bigint")
-        )
-    return F.array(*comps)
-
-
 def minhash_signature_sql(hashes_expr: str, num_hashes: int) -> str:
-    """DuckDB twin of :func:`minhash_signature_from_hashes` where
-    ``hashes_expr`` is a list of stable_hash32 values."""
+    """DuckDB MinHash signature (the ``_s0.._sN`` minima of
+    ``operators.dedup.minhash_grouped``) where ``hashes_expr`` is a list
+    of stable_hash32 values."""
     comps = []
     for i in range(num_hashes):
         a, b = _mix_consts(i)

@@ -10,8 +10,10 @@ Scale posture (100 TB): every keep-one is a window over a hash
 partition (shuffle on the dedup key only, no global sort); the fuzzy
 family avoids the reference's O(n^2) loop via MinHash banding / SimHash
 bucketing so candidate generation is an equi-join, with the exact
-pairwise check only inside buckets. The plain pairwise variants are
-kept for small inputs and as the oracle-checkable ground truth.
+pairwise check only inside buckets. Exact D4 compares rows only within
+a shared prefix token (prefix filtering: lossless, one window pass).
+The plain pairwise variants are kept for small inputs and as the
+oracle-checkable ground truth.
 
 Greedy-chain note: the reference's O(n^2) loop removes j only when its
 earlier partner i itself survived. That sequential rule is inherently
@@ -22,6 +24,9 @@ is transitive within groups (the common case for >=0.9 thresholds).
 """
 
 from __future__ import annotations
+
+import math
+from fractions import Fraction
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -266,17 +271,13 @@ def word_shingles(toks: Column, n: int) -> Column:
     return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
 
 
-def word_shingles_sql(tokens_expr: str, n: int) -> str:
-    """DuckDB twin of :func:`word_shingles` (1-based list_slice)."""
-    return (
-        f"list_transform(range(1, greatest(len({tokens_expr}) - {n - 1}, 0) + 1), "
-        f"_i -> array_to_string(list_slice({tokens_expr}, _i, _i + {n - 1}), ' '))"
-    )
-
-
-# D4 — similarity dedup, exact pairwise form ("remove if any earlier
-# similar row exists"). Quadratic — correct for modest partitions and
-# the oracle ground truth for the LSH path.
+# D4 — similarity dedup, exact form ("remove if any earlier similar row
+# exists") as one prefix-filtered window pass. Prefix filtering (Chaudhuri
+# et al., ICDE 2006; Vernica et al., SIGMOD 2010): under one global token
+# order, two sets with Jaccard >= t share a token among the first
+# |A| - ceil(t*|A|) + 1 tokens of each, so comparing rows only within a
+# shared prefix token loses no pair. Sub-quadratic except for tokens that
+# sit in most rows' prefixes; the oracle ground truth for the LSH path.
 
 def dedup_similarity_exact(
     df: DataFrame,
@@ -289,71 +290,73 @@ def dedup_similarity_exact(
 
     ``prefer_desc_col`` mirrors the reference's keep-newest rule: rows
     are ordered by (prefer desc, id asc) and a row is dropped when any
-    predecessor in that order has Jaccard >= threshold.
+    predecessor in that order has token-set Jaccard >= threshold. Rows
+    with an empty token set or a null id are never dropped; when ids
+    repeat, a flagged id drops every row carrying it.
+
+    One read of ``df``, no join: each row is copied once per prefix
+    token (order: xxhash64 then token), a window per token checks the
+    row against the earlier rows sharing that token, and a window per
+    id folds the copies back into the row.
     """
-    toks = F.array_distinct(F.col(token_col))
-    base = df.withColumn("_set", toks)
-    # Lossless size-band prune: jaccard(A,B) <= min(|A|,|B|)/max(|A|,|B|),
-    # so pairs whose set sizes differ by more than the threshold ratio
-    # cannot match — the quadratic join only compares size-compatible
-    # rows. Output is provably unchanged.
-    size_band = (
-        F.size("_lset").cast("double") * threshold <= F.size("_rset").cast("double")
-    ) & (F.size("_rset").cast("double") * threshold <= F.size("_lset").cast("double"))
-    if prefer_desc_col:
-        # Falsy-to-0 like the reference ('publish_year or 0',
-        # strict_deduplication.py:68-69): a null preference must still
-        # order (a null comparison would null the join predicate and
-        # silently keep both rows of a near-dup pair).
-        pref = F.coalesce(F.col(prefer_desc_col), F.lit(0))
-        left_cols = [
-            F.col(id_col).alias("_lid"),
-            pref.alias("_lpref"),
-            F.col("_set").alias("_lset"),
-        ]
-        right_cols = [
-            F.col(id_col).alias("_rid"),
-            pref.alias("_rpref"),
-            F.col("_set").alias("_rset"),
-        ]
-        precedes = (F.col("_lpref") > F.col("_rpref")) | (
-            (F.col("_lpref") == F.col("_rpref")) & (F.col("_lid") < F.col("_rid"))
-        )
-    else:
-        left_cols = [F.col(id_col).alias("_lid"), F.col("_set").alias("_lset")]
-        right_cols = [F.col(id_col).alias("_rid"), F.col("_set").alias("_rset")]
-        precedes = F.col("_lid") < F.col("_rid")
-    dup_ids = (
-        base.select(*left_cols)
-        .join(base.select(*right_cols), precedes & size_band)
-        .filter(F.size("_rset") > 0)
-        .filter(F.size("_lset") > 0)
-        .filter(jaccard_token_sets(F.col("_lset"), F.col("_rset")) >= F.lit(threshold))
-        .select(F.col("_rid").alias(id_col))
-        .distinct()
+    if not 0 < threshold <= 1:
+        raise ValueError(f"threshold must be in (0, 1], got {threshold!r}")
+    # threshold as num/den for the integer prefix length: the written
+    # value (0.9 -> 9/10) when the double rounds back to it, else rounded
+    # down, which only lengthens prefixes
+    q = Fraction(threshold).limit_denominator(1000)
+    if float(q) != threshold:
+        q = Fraction(math.floor(Fraction(threshold) * 1000), 1000)
+    base = df.withColumn("_set", F.array_distinct(F.col(token_col)))
+    n = "CAST(size(_set) AS BIGINT)"
+    prefix_len = F.expr(
+        f"{n} - ({n} * {q.numerator} + {q.denominator - 1}) DIV {q.denominator} + 1"
     )
-    return base.join(dup_ids, id_col, "left_anti").drop("_set")
+    ordered = F.array_sort(
+        F.transform("_set", lambda t: F.struct(F.xxhash64(t).alias("h"), t.alias("t")))
+    )
+    prefix = F.transform(F.slice(ordered, 1, prefix_len), lambda s: s["t"])
+    # Empty sets explode to one (_pos null) row keyed by its own id, so
+    # they skip the token window instead of sharing one null partition.
+    copies = base.select("*", F.posexplode_outer(prefix).alias("_pos", "_tok"))
+
+    rid, rset = F.col(id_col), F.col("_set")
+    # Falsy-to-0 like the reference ('publish_year or 0',
+    # strict_deduplication.py:68-69): a null preference must still
+    # order, or a near-dup pair would silently keep both rows.
+    rpref = F.coalesce(F.col(prefer_desc_col), F.lit(0)) if prefer_desc_col else F.lit(0)
+    earlier = (
+        Window.partitionBy("_tok", F.when(F.col("_pos").isNull(), rid))
+        .orderBy(rpref.desc(), rid.asc())
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+
+    def similar(x: Column) -> Column:
+        # Size band first: jaccard(A,B) <= min(|A|,|B|)/max(|A|,|B|).
+        lsize, rsize = F.size(x["s"]).cast("double"), F.size(rset).cast("double")
+        return (
+            ((x["p"] > rpref) | ((x["p"] == rpref) & (x["id"] < rid)))
+            & (lsize * threshold <= rsize)
+            & (rsize * threshold <= lsize)
+            & (jaccard_token_sets(x["s"], rset) >= F.lit(threshold))
+        )
+
+    seen = F.collect_list(
+        F.struct(rid.alias("id"), rpref.alias("p"), rset.alias("s"))
+    ).over(earlier)
+    dup = F.coalesce(F.when(F.size(rset) > 0, F.exists(seen, similar)), F.lit(False))
+    return (
+        copies.withColumn("_dup", dup)
+        .withColumn("_any", F.max("_dup").over(Window.partitionBy(rid)))
+        .filter(F.coalesce(F.col("_pos"), F.lit(0)) == 0)
+        .filter(rid.isNull() | ~F.col("_any"))
+        .drop("_set", "_pos", "_tok", "_dup", "_any")
+    )
 
 
 # MinHash + LSH banding — the 100 TB path for D4. Candidate pairs come
 # from equality joins on band keys (shuffle, no cross product); each
 # candidate is verified with the exact Jaccard.
-
-def minhash_signature(toks: Column, num_hashes: int) -> Column:
-    """Tokens are md5-hashed once; components use affine mixes."""
-    hashes = F.transform(toks, lambda t: hashing.stable_hash32(t))
-    return hashing.minhash_signature_from_hashes(hashes, num_hashes)
-
-
-def lsh_band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """band key = band index + md5 of the band's signature slice."""
-    keys = []
-    for b in range(bands):
-        band_slice = F.slice(signature, b * rows_per_band + 1, rows_per_band)
-        digest = hashing.md5_hex(F.concat_ws(",", F.transform(band_slice, lambda v: v.cast("string"))))
-        keys.append(F.concat(F.lit(f"{b}:"), digest))
-    return F.array(*keys)
-
 
 def _band_key_cols(num_hashes: int, bands: int) -> list[Column]:
     """LSH band-key columns over a :func:`minhash_grouped` frame's
@@ -963,7 +966,7 @@ def near_dup_pairs_ngram(
     ).filter(F.size("_sh") > 0)
     left = sh.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sa"))
     right = sh.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sb"))
-    # same lossless size-band prune as dedup_similarity_exact
+    # Lossless size-band prune: jaccard(A,B) <= min(|A|,|B|)/max(|A|,|B|).
     size_band = (
         F.size("_sa").cast("double") * threshold <= F.size("_sb").cast("double")
     ) & (F.size("_sb").cast("double") * threshold <= F.size("_sa").cast("double"))

@@ -12,7 +12,7 @@ Reference chain (each arrow was a separate script + JSONL file there):
 
 Here the whole pre-enrichment chain is ONE DataFrame lineage —
 Catalyst sees every stage, pushes filters below the expensive dedup
-joins, and materializes nothing until asked. Only the paid LLM pass
+shuffles, and materializes nothing until asked. Only the paid LLM pass
 breaks the lineage on purpose (checkpointed parquet, S9), exactly
 where the reference semantically requires durability.
 
@@ -70,8 +70,9 @@ def merge_sources(sources: list[DataFrame]) -> DataFrame:
     return dedup.union_first_wins(keyed, "_k", ["_ord"]).drop("_k", "_ord")
 
 
-# Above this row count the quadratic D4-exact join is the pipeline's
-# scale-killer and the MinHash-banding path takes over by default.
+# Above this row count the MinHash-banding path takes over D4 by
+# default: exact D4's per-token windows grow with the rows that share a
+# frequent prefix token, banding's candidate joins only with near-dups.
 SIMILARITY_LSH_DEFAULT_THRESHOLD = 100_000
 
 
@@ -116,10 +117,12 @@ def dedup_stage(papers: DataFrame, similarity: str = "exact") -> DataFrame:
 
     ``similarity`` picks the D4 engine:
 
-    - ``"exact"`` — size-band-pruned pairwise Jaccard
-      (:func:`~..operators.dedup.dedup_similarity_exact`). Quadratic;
-      the oracle ground truth and the right choice below
-      ~``SIMILARITY_LSH_DEFAULT_THRESHOLD`` rows.
+    - ``"exact"`` — every pair with Jaccard >= 0.9, found by one
+      prefix-filtered window pass over the D3 output
+      (:func:`~..operators.dedup.dedup_similarity_exact`): no self-join,
+      so the D2/D3 lineage is computed once. The oracle ground truth
+      and the right choice below ~``SIMILARITY_LSH_DEFAULT_THRESHOLD``
+      rows.
     - ``"lsh"`` — MinHash banding
       (:func:`~..operators.dedup.dedup_minhash_lsh`): candidates come
       from band-key equi-joins (shuffle, never a cross product) — the

@@ -4,10 +4,13 @@ idempotence)."""
 
 from __future__ import annotations
 
+import random
+
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from llm_enhanced_data_pipeline_spark.operators import dedup
+from llm_enhanced_data_pipeline_spark.operators import cleaning, dedup
 
 
 def test_null_preserving_keeps_every_null_key_row(spark):
@@ -76,6 +79,102 @@ def test_similarity_exact_keeps_preferred_and_is_idempotent(spark):
     # idempotence: running dedup again removes nothing
     again = dedup.dedup_similarity_exact(out, "i", "toks", threshold=0.9, prefer_desc_col="year")
     assert sorted(r.i for r in again.collect()) == got
+
+    # prefix filtering needs t > 0: at t = 0 disjoint sets "match"
+    with pytest.raises(ValueError):
+        dedup.dedup_similarity_exact(df, "i", "toks", threshold=0.0)
+
+
+def _d4_corpus() -> list[tuple]:
+    """(row, i, year, title) rows for the D4 differential tests. ``i`` is
+    the dedup id (one null, one repeated); ``row`` identifies a row."""
+    rng = random.Random(7)
+    vocab = [f"w{k}" for k in range(40)]
+    specs = []
+    for _ in range(40):
+        # "the" opens every title: the hot-token partition
+        base = ["the"] + rng.sample(vocab, rng.randint(5, 12))
+        year = rng.choice([None, 2019, 2020, 2020, 2021])
+        specs.append((year, " ".join(base)))
+        v = rng.random()
+        if v < 0.35:
+            specs.append((rng.choice([None, year, 2022]), " ".join(base[:-1])))
+        elif v < 0.7:
+            specs.append((year, " ".join(base[:-1] + [rng.choice(vocab)])))
+        else:  # repeated tokens: same set as base
+            specs.append((year, "  ".join(base + base[:3]).upper()))
+    for n in (5, 10, 20):  # pairs at exactly 0.8, 0.9 and 0.95
+        full = ["the"] + [f"t{n}_{k}" for k in range(n - 1)]
+        specs += [(2020, " ".join(full)), (2020, " ".join(full[1:])),
+                  (None, " ".join(full[:-1]))]
+    specs += [(2020, ""), (None, "   "), (2021, "\t \n"), (2020, "")]
+    rows = [(r, r, y, t) for r, (y, t) in enumerate(specs)]
+    rows[3] = (3, None, rows[3][2], rows[3][3])  # null id
+    rows[9] = (9, 4, rows[9][2], rows[9][3])  # id 4 twice
+    return rows
+
+
+def _replay_d4(rows, threshold, prefer):
+    """All-pairs Python replay of dedup_similarity_exact's rule."""
+    sets = {r: set(t.lower().split()) for r, _, _, t in rows}
+
+    def precedes(a, b):
+        (_, ia, ya, _), (_, ib, yb, _) = a, b
+        ids_lt = ia is not None and ib is not None and ia < ib
+        if not prefer:
+            return ids_lt
+        pa, pb = ya or 0, yb or 0
+        return pa > pb or (pa == pb and ids_lt)
+
+    def similar(a, b):
+        sa, sb = sets[a[0]], sets[b[0]]
+        return (
+            bool(sa) and bool(sb)
+            and len(sa) * threshold <= len(sb) and len(sb) * threshold <= len(sa)
+            and len(sa & sb) / len(sa | sb) >= threshold
+        )
+
+    flagged = {r[1] for r in rows for l in rows if precedes(l, r) and similar(l, r)}
+    return sorted(r[0] for r in rows if r[1] is None or r[1] not in flagged)
+
+
+def _d4_frame(spark, rows):
+    df = spark.createDataFrame(rows, "row INT, i INT, year INT, title STRING")
+    return df.withColumn("toks", cleaning.tokens(F.col("title")))
+
+
+@pytest.mark.parametrize("threshold", [0.8, 0.9, 0.95])
+def test_similarity_exact_matches_all_pairs_replay(spark, threshold):
+    rows = _d4_corpus()
+    df = _d4_frame(spark, rows)
+    for prefer in ("year", None):
+        got = sorted(
+            r.row
+            for r in dedup.dedup_similarity_exact(
+                df, "i", "toks", threshold=threshold, prefer_desc_col=prefer
+            ).collect()
+        )
+        want = _replay_d4(rows, threshold, prefer)
+        assert len(want) < len(rows)
+        assert got == want, (threshold, prefer)
+
+
+def test_similarity_exact_survivors_independent_of_partitioning(spark):
+    rows = _d4_corpus()
+    want = _replay_d4(rows, 0.9, "year")
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        for parts in (1, 3, 17):
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            out = dedup.dedup_similarity_exact(
+                _d4_frame(spark, rows), "i", "toks", threshold=0.9, prefer_desc_col="year"
+            )
+            assert sorted(r.row for r in out.collect()) == want, parts
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 def test_minhash_finds_exact_jaccard_pairs(spark):

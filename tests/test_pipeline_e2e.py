@@ -170,6 +170,18 @@ def test_dedup_stage_lsh_matches_exact_and_plans_equi_join(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_dedup_stage_exact_reads_its_input_once(spark):
+    """D4-exact is a window pass, not a self-join plus an anti-join: the
+    plan has no all-pairs join and one paper_id shuffle (D2's), so the
+    D2/D3 lineage (and the ``_ord`` it mints) is computed once."""
+    a, b = _fixture_sources(spark)
+    out = P.dedup_stage(P.merge_sources([a, b]), similarity="exact")
+    plan = out._jdf.queryExecution().executedPlan().toString()  # before AQE re-plans
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert plan.count("Exchange hashpartitioning(paper_id#") == 1
+
+
 def test_pipeline_golden_artifact_counts(spark):
     """Golden reproduction of the reference's published artifact shapes:
     per-stage retention counts (strict_deduplication.py:31,44,75), the

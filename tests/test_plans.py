@@ -109,7 +109,6 @@ QUADRATIC_BY_DESIGN = {
                               # side (sampled at 100 TB) vs the banded
                               # candidate stage + broadcast 1-row totals
     "near_dup_pairs_embedding",  # small-N oracle twin of the IVF path
-    "dedup_fuzzy_jaccard",    # D4 exact form (pipeline uses the LSH twin at scale)
     "tf_embedding_search",    # R4: query vector broadcast against corpus
     "tf_embedding_search_f32",  # same shape over the float32 store
     "rag_context_assembly",   # same broadcast query-row shape
@@ -219,7 +218,6 @@ QUADRATIC_BY_DESIGN = {
                                   # 1-row distance-table frames
     "ann_recall_report_sliced",
     "mmr_rerank_sliced",          # per-round broadcast 1-row argmax
-    "dedup_fuzzy_jaccard_sliced",
     "near_dup_pairs_ngram_sliced",
     "near_dup_pairs_embedding_sliced",
     "lsh_tuning_report_sliced",
